@@ -12,6 +12,15 @@ and a dense (n_values+1, 3) weight matrix (last row = OOV/unseen → 0), plus a
 3×3 label-transition matrix (the template file's ``B`` line). Score of a
 label sequence y is sum_t emit[t, y_t] + sum_{t>0} T[y_{t-1}, y_t].
 
+Scoring has one integer path (CrfModel.emissions), taking the kernel's
+column form: token-derived columns per distinct batch token plus one shared
+token-codes array, and the positional interval column. Single-column
+templates probe their vocab once per distinct value and reach all positions
+with one gather per offset; compound templates probe by mixed-radix int64
+component-id keys read from one factorized p-gram array per relative
+pattern. The reference for all of it is the scalar oracle
+(oracle.scalar_emissions), which probes the vocab dicts with plain strings.
+
 The shipped weights artifact (resources/weights.npz) is trained here with a
 seeded averaged structured perceptron on the synthetic annotated corpus
 (corpus.py) — the reference's own binary model is absent from its repo
@@ -22,10 +31,12 @@ extraction), verified span-for-span against the scalar oracle.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 
-from astrospark.templates import BOUNDARY, EVAL_PLAN, N_LABELS, TEMPLATES
+from astrospark.templates import BOUNDARY, EVAL_PLAN, INTERVAL_COL, N_LABELS, TEMPLATES
 
 # ---------------------------------------------------------------------------
 # template value construction (vectorized)
@@ -52,16 +63,17 @@ def shift_within_sequences(col: np.ndarray, seq_ids: np.ndarray, d: int) -> np.n
     return out
 
 
-# separator for compound-template observation values; \x1f cannot appear in
-# tokens (it is not producible by the tokenizer's delimiters/runs ambiguity-free
-# join matters: '/' IS a valid single-char token)
+# separator for compound-template observation values (training vocab keys
+# and the oracle's probe strings). A token may itself contain it; the
+# integer compound probe still agrees with the joined-string probe then
+# (see CrfModel._compound_tables).
 SEP = "\x1f"
 
 
 def template_values(cols: list[np.ndarray], seq_ids: np.ndarray) -> list[np.ndarray]:
     """For each template, the (possibly compound) observation string per
     position. Compound values are joined with SEP. (Training/oracle path —
-    inference uses the factorized fast path in CrfModel.emissions.)"""
+    inference uses the integer path in CrfModel.emissions.)"""
     values: list[np.ndarray] = []
     cols = [
         c if isinstance(c, np.ndarray) else np.asarray(c, dtype=object) for c in cols
@@ -104,6 +116,12 @@ class CrfModel:
     __slots__ = ("vocabs", "weights", "trans", "_indexes", "_ctab")
 
     def __init__(self, vocabs: list[dict], weights: list[np.ndarray], trans: np.ndarray):
+        # the scorer and the unrolled Viterbi are written for N_LABELS labels
+        if np.shape(trans) != (N_LABELS, N_LABELS):
+            raise ValueError(f"trans shape {np.shape(trans)}, want {(N_LABELS, N_LABELS)}")
+        for k, w in enumerate(weights):
+            if np.ndim(w) != 2 or np.shape(w)[1] != N_LABELS:
+                raise ValueError(f"weights[{k}] shape {np.shape(w)}, want (n, {N_LABELS})")
         self.vocabs = vocabs
         self.weights = weights
         self.trans = trans
@@ -126,66 +144,57 @@ class CrfModel:
 
     def _compound_tables(self):
         """Integer-key probe tables for the compound templates, built once
-        per model. Every compound vocab key is split on SEP into its
-        component observation strings (exactly len(spec) parts — verified;
-        any undecomposable key disables the tables and the scorer keeps the
-        string path). Components get dense ids from one shared index, and
-        each vocab key becomes a mixed-radix int64 (base B = #components+1,
-        leaving digit B-1 free as the not-in-any-vocab sentinel for batch
-        tokens never seen in training). A batch combo then matches a vocab
-        row iff its component ids match digit-for-digit — equivalent to the
-        string join+probe whenever batch components are SEP-free, which the
-        scorer checks per batch (see emissions).
+        per model: ``(comp_index, B, boundary_cid, pad, compounds)``.
+
+        Every compound vocab key must split on SEP into exactly ``len(spec)``
+        parts (else ValueError). The parts get dense ids from one shared
+        ``comp_index`` and each key becomes a mixed-radix int64 over them
+        (base B = #components + 1; digit B-1 is the unseen-token sentinel,
+        so B**p must fit int64, else ValueError). A batch combo then hits a
+        vocab row iff its component ids match digit for digit. That equals
+        the oracle's ``SEP.join`` probe on every input: components are
+        SEP-free, so a batch value containing SEP gets the sentinel and
+        scores OOV, and its joined string has more than p parts and misses
+        every key too.
+
+        ``compounds[k] = (pattern, d0, key_index)``: template k's spec
+        ``((d_0, c_0), ...)`` as the relative pattern ``((d_j - d_0, c_j),
+        ...)`` read at start offset d0. ``pad`` is the compound templates'
+        largest |d|, the boundary padding emissions puts around every
+        sequence so no read crosses into a neighbour.
         """
         if self._ctab is None:
+            compound = [(k, spec) for k, (_n, spec) in enumerate(TEMPLATES) if len(spec) > 1]
+            split: dict[int, np.ndarray] = {}
             comps: set[str] = {BOUNDARY}
-            split: dict[int, list[list[str]]] = {}
-            ok = True
-            for k, (_name, spec) in enumerate(TEMPLATES):
-                p = len(spec)
-                if p <= 1:
-                    continue
-                rows = []
-                for key in self.vocabs[k]:
-                    parts = key.split(SEP)
-                    if len(parts) != p:
-                        ok = False
-                        break
-                    rows.append(parts)
-                if not ok:
-                    break
-                split[k] = rows
-                for parts in rows:
-                    comps.update(parts)
-            if ok:
-                comp_index = pd.Index(np.array(sorted(comps), dtype=object))
-                B = len(comp_index) + 1
-                max_p = max((len(TEMPLATES[k][1]) for k in split), default=1)
-                # mixed-radix keys must fit int64
-                ok = B**max_p < 2**62
-            if ok:
-                boundary_cid = int(comp_index.get_loc(BOUNDARY))
-                key_idx: dict[int, pd.Index] = {}
-                for k, rows in split.items():
-                    if rows:
-                        p = len(rows[0])
-                        cids = (
-                            comp_index.get_indexer(
-                                np.array(rows, dtype=object).ravel()
-                            )
-                            .reshape(len(rows), p)
-                            .astype(np.int64)
-                        )
-                        keys = np.zeros(len(rows), dtype=np.int64)
-                        for j in range(p):
-                            keys = keys * B + cids[:, j]
-                        key_idx[k] = pd.Index(keys)
-                    else:
-                        key_idx[k] = pd.Index(np.empty(0, dtype=np.int64))
-                self._ctab = (comp_index, B, boundary_cid, key_idx)
-            else:
-                self._ctab = False
-        return self._ctab or None
+            for k, spec in compound:
+                rows = [key.split(SEP) for key in self.vocabs[k]]
+                if set(map(len, rows)) - {len(spec)}:
+                    raise ValueError(
+                        f"template {TEMPLATES[k][0]}: vocab keys do not split "
+                        f"into {len(spec)} SEP-free parts"
+                    )
+                split[k] = np.array(rows, dtype=object).reshape(-1, len(spec))
+                comps.update(split[k].ravel())
+            comp_index = pd.Index(np.array(sorted(comps), dtype=object))
+            B = len(comp_index) + 1
+            p_max = max((len(spec) for _k, spec in compound), default=1)
+            if B**p_max > 2**63:
+                raise ValueError(f"compound keys overflow int64: {B}**{p_max}")
+            compounds = {}
+            for k, spec in compound:
+                cids = comp_index.get_indexer(split[k].ravel()).astype(np.int64)
+                cids = cids.reshape(split[k].shape)
+                keys = np.zeros(len(cids), dtype=np.int64)
+                for j in range(len(spec)):
+                    keys = keys * B + cids[:, j]
+                d0 = spec[0][0]
+                pattern = tuple((d - d0, c) for d, c in spec)
+                compounds[k] = (pattern, d0, pd.Index(keys))
+            pad = max((abs(d) for _k, spec in compound for d, _c in spec), default=0)
+            boundary_cid = int(comp_index.get_loc(BOUNDARY))
+            self._ctab = (comp_index, B, boundary_cid, pad, compounds)
+        return self._ctab
 
     def save(self, path: str) -> None:
         arrays: dict[str, np.ndarray] = {"trans": self.trans}
@@ -210,29 +219,30 @@ class CrfModel:
     # -- scoring ------------------------------------------------------------
 
     def emissions(self, cols: list, seq_ids: np.ndarray) -> np.ndarray:
-        """(n, L) emission scores for a batch of concatenated sequences.
+        """(n, L) float64 emission scores for a batch of concatenated
+        sequences (``seq_ids`` grouped: each sequence contiguous).
 
-        Fast path: each base column is factorized ONCE per batch; per
-        template the vocab lookup runs over the column's UNIQUE values
-        (a lookup table), then a single gather applies it to all n
-        positions — dict work is O(#unique) instead of O(n·#templates).
+        ``cols`` is the kernel's form: entries 0-16 are ``(values, codes)``
+        pairs sharing ONE ``codes`` array, where ``values`` holds the
+        column's value per distinct batch token and the value at position t
+        is ``values[codes[t]]``; entry 17 (INTERVAL_COL) is the per-position
+        interval flag, factorized here into the same pair form.
 
-        A ``cols`` entry may also be a tuple ``(per_unique_vals,
-        full_codes)`` — the kernel's unique-token path: the column's value
-        at position t is ``per_unique_vals[full_codes[t]]``. Factorization
-        then runs over the per-unique values (thousands) and reaches full
-        length with one int gather, never materializing n strings.
+        Accumulation follows ``templates.EVAL_PLAN`` in float64, the order
+        the scalar oracle (oracle.scalar_emissions) uses, so both agree bit
+        for bit:
 
-        Evaluation follows ``templates.EVAL_PLAN``: single-col templates
-        over token-derived columns are grouped by offset, and when every
-        such column arrives as a tuple sharing ONE ``full_codes`` array
-        (the kernel's unique-token path), each group pre-sums its members'
-        per-distinct-token weight tables (float64, ascending template
-        order) and expands the sum with a SINGLE length-n gather — one
-        big-n take+add per offset instead of one per template (~5x less
-        memory traffic; L is only 3, so the whole pass is bandwidth-bound).
-        The scalar oracle accumulates in the identical plan order, keeping
-        kernel ≡ oracle bit-exact (see EVAL_PLAN's docstring).
+        - ``group``/``single``: the item's templates share one offset d and
+          one codes array. Each template's vocab rows are probed once per
+          distinct column value, summed (ascending template order) into one
+          (#values + 1, L) table whose last row is the boundary row, and
+          expanded with a single length-n gather at the codes shifted by d.
+        - ``multi``: see _compound_tables. Every column a compound reads is
+          laid out as component ids with ``pad`` boundary ids on each side
+          of every sequence, so a read at any offset |d| <= pad stays inside
+          its own sequence or its padding. One factorized p-gram key array
+          per relative pattern serves all templates sharing it; template k
+          reads it at ``ext_pos + d0``.
         """
         n = len(seq_ids)
         # float64 accumulation — matches the scalar oracle (and Wapiti's C
@@ -240,262 +250,77 @@ class CrfModel:
         # Viterbi chains to flip near-tie decodes on multi-thousand-token
         # sequences (caught by giant-doc fuzz)
         scores = np.zeros((n, N_LABELS), dtype=np.float64)
-        codes: dict[int, np.ndarray] = {}
-        uniques: dict[int, np.ndarray] = {}
+        # one reusable gather buffer: per-template temporaries were ~45% of
+        # the scoring time (malloc + page faults)
+        tmp = np.empty((n, N_LABELS), dtype=np.float64)
+        token_codes = np.asarray(cols[0][1], dtype=np.int64)
+        icodes, ivals = pd.factorize(cols[INTERVAL_COL])
+        columns = [(values, token_codes) for values, _codes in cols[:INTERVAL_COL]]
+        columns.append((ivals, icodes.astype(np.int64)))
 
-        def col_codes(c: int) -> np.ndarray:
-            if c not in codes:
-                if isinstance(cols[c], tuple):
-                    uvals, full_codes = cols[c]
-                    cd, un = pd.factorize(pd.Series(uvals))
-                    codes[c] = cd.astype(np.int64)[full_codes]
-                else:
-                    cd, un = pd.factorize(cols[c])
-                    codes[c] = cd.astype(np.int64)
-                uniques[c] = np.asarray(un, dtype=object)
-            return codes[c]
+        @functools.cache
+        def distinct_values(c: int) -> tuple[np.ndarray, np.ndarray]:
+            """Column c's per-value code into its distinct values, and those
+            values — shapes and prefixes repeat across tokens, so each vocab
+            probe runs over the smaller set."""
+            cd, un = pd.factorize(pd.Series(columns[c][0]))
+            return cd.astype(np.int64), np.asarray(un, dtype=object)
 
-        shifted: dict[tuple[int, int], np.ndarray] = {}
+        comp_index, B, boundary_cid, pad, compounds = self._compound_tables()
+        new_seq = np.ones(n, dtype=bool)
+        new_seq[1:] = seq_ids[1:] != seq_ids[:-1]
+        ext_pos = np.arange(n, dtype=np.int64) + pad * (2 * np.cumsum(new_seq) - 1)
+        m_ext = n + 2 * pad * int(new_seq.sum())
 
-        def get_shifted(d: int, c: int) -> np.ndarray:
-            key = (d, c)
-            if key not in shifted:
-                shifted[key] = shift_codes(col_codes(c), seq_ids, d)
-            return shifted[key]
+        @functools.cache
+        def padded_cids(c: int) -> np.ndarray:
+            cd, un = distinct_values(c)
+            cid = comp_index.get_indexer(un).astype(np.int64)
+            cid[cid < 0] = B - 1  # unseen-token sentinel
+            out = np.full(m_ext, boundary_cid, dtype=np.int64)
+            out[ext_pos] = cid[cd][columns[c][1]]
+            return out
 
-        ccodes: dict[int, np.ndarray | None] = {}
-        # canonical consecutive-run compound caches (see the compound
-        # branch): boundary-padded per-position component codes per column,
-        # and one factorized adjacent p-gram key array per (column, p)
-        canon_ext: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        canon_gram: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-
-        def col_ccodes(c: int, ctab) -> np.ndarray | None:
-            """Column c's per-unique component ids for the compound
-            integer-key path (boundary id appended so shifted code -1
-            gathers it), or None when a batch value contains SEP — the
-            one case where string-join equality and componentwise
-            equality can diverge."""
-            if c not in ccodes:
-                col_codes(c)  # materialize uniques[c]
-                u = uniques[c]
-                comp_index, _B, boundary_cid, _ki = ctab
-                if len(u) and (
-                    pd.Series(u, dtype=object)
-                    .str.contains(SEP, regex=False)
-                    .to_numpy(dtype=bool)
-                    .any()
-                ):
-                    ccodes[c] = None
-                else:
-                    cid = comp_index.get_indexer(u).astype(np.int64)
-                    cid[cid < 0] = len(comp_index)  # unseen-token sentinel
-                    ccodes[c] = np.append(cid, np.int64(boundary_cid))
-            return ccodes[c]
-
-        # one reusable (n, L) float32 gather buffer for per-template takes
-        # — per-template temp allocations (6+ MB each) were ~45% of the
-        # single-template path (malloc + page faults), and np.take(out=)
-        # + in-place += is bit-identical to the allocating form (same
-        # values, same float64 accumulation order)
-        tmp = np.empty((n, N_LABELS), dtype=np.float32)
-
-        def single_into(k: int, d: int, c: int) -> None:
-            """Gather template k's weight rows for all n positions → tmp."""
-            vocab = self.vocabs[k]
-            w = self.weights[k]
-            oov = len(vocab)
-            sc = get_shifted(d, c)
-            lut = self._vocab_index(k).get_indexer(uniques[c])
-            lut[lut < 0] = oov
-            lut = np.append(lut, vocab.get(BOUNDARY, oov))  # code -1
-            # gather weights into a per-batch small table first: the
-            # big-n gather then hits a cache-resident (u+1, L) array
-            # (negative boundary codes index the appended last row —
-            # np.take supports them exactly like fancy indexing)
-            np.take(w[lut], sc, axis=0, out=tmp)
-
-        # shared-unique grouped path: every grouped column is a tuple over
-        # the SAME full_codes array (identity check — the kernel builds all
-        # 17 from one el_codes), so all members of an offset group share
-        # one shifted index and their tables can be pre-summed
-        group_cols = sorted(
-            {c for item in EVAL_PLAN if item[0] == "group" for _k, c in item[2]}
-        )
-        fast = bool(group_cols) and all(
-            isinstance(cols[c], tuple) for c in group_cols
-        )
-        if fast:
-            base_codes = cols[group_cols[0]][1]
-            fast = all(cols[c][1] is base_codes for c in group_cols[1:])
-        if fast:
-            n_uniq = len(cols[group_cols[0]][0])
-            base_codes = np.asarray(base_codes, dtype=np.int64)
-            tmp64 = np.empty((n, N_LABELS), dtype=np.float64)
-            ucodes: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-            def col_ucodes(c: int) -> tuple[np.ndarray, np.ndarray]:
-                # factorize the PER-UNIQUE column values (dedupes shapes/
-                # prefixes shared across distinct tokens) so each template's
-                # vocab probe runs over the smaller value set
-                if c not in ucodes:
-                    cd, un = pd.factorize(pd.Series(cols[c][0]))
-                    ucodes[c] = (cd.astype(np.int64), np.asarray(un, dtype=object))
-                return ucodes[c]
-
-            shifted_uid: dict[int, np.ndarray] = {}
-
-            def get_shifted_uid(d: int) -> np.ndarray:
-                if d not in shifted_uid:
-                    shifted_uid[d] = shift_codes(base_codes, seq_ids, d)
-                return shifted_uid[d]
+        @functools.cache
+        def gram(pattern: tuple) -> tuple[np.ndarray, np.ndarray, int]:
+            """Factorized keys of ``pattern`` at every padded position i in
+            [lo, hi) (digit j read at i + r_j), their distinct keys, and lo."""
+            rel = [r for r, _c in pattern]
+            lo, hi = -min(rel), m_ext - max(rel)
+            key = padded_cids(pattern[0][1])[lo:hi].copy()
+            for r, c in pattern[1:]:
+                key *= B
+                key += padded_cids(c)[lo + r : hi + r]
+            inv, uk = pd.factorize(key)
+            return inv.astype(np.int64), np.asarray(uk, dtype=np.int64), lo
 
         for item in EVAL_PLAN:
-            if item[0] == "group":
-                d, members = item[1], item[2]
-                if fast:
-                    # per-distinct-token pre-sum: G[u] = sum over member
-                    # templates of their weight row for token u (float64,
-                    # ascending k); last row = the members' summed boundary
-                    # rows (all members share offset d, so positions are
-                    # jointly in-bounds or jointly boundary)
-                    grp = np.zeros((n_uniq + 1, N_LABELS), dtype=np.float64)
-                    for k, c in members:
-                        vocab = self.vocabs[k]
-                        w = self.weights[k]
-                        oov = len(vocab)
-                        cd, un = col_ucodes(c)
-                        lut = self._vocab_index(k).get_indexer(un)
-                        lut[lut < 0] = oov
-                        grp[:n_uniq] += w[lut[cd]]
-                        grp[n_uniq] += w[vocab.get(BOUNDARY, oov)]
-                    np.take(grp, get_shifted_uid(d), axis=0, out=tmp64)
-                    scores += tmp64
-                elif len(members) == 1:
-                    # no pre-sum to share — identical to the single path
-                    (k, c) = members[0]
-                    single_into(k, d, c)
-                    scores += tmp
-                else:
-                    part = np.zeros((n, N_LABELS), dtype=np.float64)
-                    for k, c in members:
-                        single_into(k, d, c)
-                        part += tmp
-                    scores += part
-                continue
-            if item[0] == "single":
-                _tag, k, d, c = item
-                single_into(k, d, c)
+            if item[0] == "multi":
+                k = item[1]
+                pattern, d0, key_index = compounds[k]
+                inv, uk, lo = gram(pattern)
+                row = key_index.get_indexer(uk)
+                row[row < 0] = len(self.vocabs[k])
+                table = self.weights[k][row].astype(np.float64)
+                np.take(table, inv[ext_pos + d0 - lo], axis=0, out=tmp)
                 scores += tmp
                 continue
-            # compound templates
-            k = item[1]
-            _name, spec = TEMPLATES[k]
-            vocab = self.vocabs[k]
-            w = self.weights[k]
-            oov = len(vocab)
-            # integer-key fast path: probe the vocab with mixed-radix
-            # component-id keys instead of building join strings for every
-            # unique combo. Exact iff batch components are SEP-free (then
-            # string-join equality == componentwise equality); a SEP-bearing
-            # batch column falls back to the string path below.
-            ctab = self._compound_tables()
-            if ctab is not None:
-                # canonical consecutive-run sub-path: every shipped compound
-                # template is an adjacent p-gram of ONE column at some start
-                # offset d0 (bigrams at d0 ∈ {-2,-1,0,1}, trigrams at
-                # {-2,0}), so all of them are reads of ONE canonical
-                # adjacent-p-gram array at shifted positions. Build the
-                # column's component codes once with TWO boundary sentinels
-                # padded on each side of every sequence (offsets reach ±2,
-                # and pads of adjacent sequences compose to the correct
-                # all-boundary combos), form p-gram mixed-radix keys over
-                # the padded array, and factorize ONCE per (column, p) —
-                # replacing one full-length factorize PER TEMPLATE with one
-                # per gram order. Key values are identical digit-for-digit
-                # to the per-template combine (same ascending-offset radix
-                # order, same boundary id for out-of-range and NaN-coded
-                # positions), so the probed weight rows are bit-identical.
-                offs = [d for d, _c in spec]
-                cset = {c for _d, c in spec}
-                run_ok = len(cset) == 1 and offs == list(
-                    range(offs[0], offs[0] + len(spec))
-                )
-                cid_run = col_ccodes(next(iter(cset)), ctab) if run_ok else None
-                if cid_run is not None:
-                    c0, p, d0 = next(iter(cset)), len(spec), offs[0]
-                    _ci, B, bcid, key_idx = ctab
-                    if c0 not in canon_ext:
-                        change = np.empty(n, dtype=bool)
-                        change[0] = True
-                        change[1:] = seq_ids[1:] != seq_ids[:-1]
-                        rank = np.cumsum(change) - 1
-                        ext_pos = np.arange(n, dtype=np.int64) + 2 + 4 * rank
-                        m_ext = n + 4 * int(rank[-1] + 1)
-                        pext = np.full(m_ext, bcid, dtype=np.int64)
-                        pext[ext_pos] = cid_run[col_codes(c0)]
-                        canon_ext[c0] = (pext, ext_pos)
-                    pext, ext_pos = canon_ext[c0]
-                    if (c0, p) not in canon_gram:
-                        hi = len(pext) - p + 1
-                        comb = pext[:hi].copy()
-                        for j in range(1, p):
-                            comb *= B
-                            comb += pext[j : hi + j]
-                        inv, uk = pd.factorize(comb)
-                        canon_gram[(c0, p)] = (
-                            inv.astype(np.int64),
-                            np.asarray(uk, dtype=np.int64),
-                        )
-                    inv, uk = canon_gram[(c0, p)]
-                    row = key_idx[k].get_indexer(uk).astype(np.int64)
-                    row[row < 0] = oov
-                    np.take(w[row], inv[ext_pos + d0], axis=0, out=tmp)
-                    scores += tmp
-                    continue
-                cc = [col_ccodes(c, ctab) for _d, c in spec]
-                if all(x is not None for x in cc):
-                    comp_index, B, _bcid, key_idx = ctab
-                    comb = None
-                    for (d, c), cid_ext in zip(spec, cc):
-                        sc = get_shifted(d, c)
-                        pcode = cid_ext[sc]  # -1 hits the appended boundary id
-                        comb = pcode if comb is None else comb * B + pcode
-                    inv, ucomb = pd.factorize(comb)
-                    row = key_idx[k].get_indexer(np.asarray(ucomb, dtype=np.int64))
-                    row[row < 0] = oov
-                    np.take(w[row], inv, axis=0, out=tmp)
-                    scores += tmp
-                    continue
-            # string path (fallback): combine component codes into one
-            # integer key, dedupe, and build observation strings only for
-            # the unique combos
-            comb = None
-            bases = []
-            for d, c in spec:
-                sc = get_shifted(d, c)
-                b = len(uniques[c]) + 1
-                bases.append(b)
-                comb = (sc + 1) if comb is None else comb * b + (sc + 1)
-            # hash-based factorize beats sort-based np.unique here and
-            # uniqueness order is irrelevant (gather by inv either way)
-            inv, ucomb = pd.factorize(comb)
-            ucomb = np.asarray(ucomb, dtype=comb.dtype)
-            comps = []
-            rem = ucomb.copy()
-            for (d, c), b in zip(reversed(spec), reversed(bases)):
-                comps.append((rem % b - 1, c))
-                rem //= b
-            comps.reverse()
-            svals = None
-            for comp, c in comps:
-                u = uniques[c]
-                part = np.where(comp >= 0, u[np.clip(comp, 0, None)], BOUNDARY)
-                part = part.astype(object)
-                svals = part if svals is None else svals + SEP + part
-            lut = self._vocab_index(k).get_indexer(svals)
-            lut[lut < 0] = oov
-            np.take(w[lut], inv, axis=0, out=tmp)  # same buffer reuse
+            if item[0] == "group":
+                _tag, d, members = item
+            else:
+                _tag, k, d, c = item
+                members = ((k, c),)
+            values, codes = columns[members[0][1]]
+            table = np.zeros((len(values) + 1, N_LABELS), dtype=np.float64)
+            for k, c in members:
+                vocab, w = self.vocabs[k], self.weights[k]
+                oov = len(vocab)
+                cd, un = distinct_values(c)
+                row = self._vocab_index(k).get_indexer(un)
+                row[row < 0] = oov
+                table[:-1] += w[row[cd]]
+                table[-1] += w[vocab.get(BOUNDARY, oov)]
+            np.take(table, shift_codes(codes, seq_ids, d), axis=0, out=tmp)
             scores += tmp
         return scores
 
@@ -557,33 +382,23 @@ def viterbi_batched(emit: np.ndarray, seq_ids: np.ndarray, trans: np.ndarray,
         delta = em[:, 0, :].copy()  # (S, L)
         psi = np.zeros((S, Tmax, N_LABELS), dtype=np.int8)
         active_len = ls
-        if N_LABELS == 3:
-            # unrolled 3-label max: the same cand[s,i,j] = delta[s,i] +
-            # trans[i,j] scalars, with argmax's first-max tie-break
-            # reproduced by strict > comparisons (lower prev index wins
-            # ties) — bit-identical to the generic path below
-            t0c, t1c, t2c = transT[0], transT[1], transT[2]
-            for t in range(1, Tmax):
-                v0 = delta[:, 0:1] + t0c
-                v1 = delta[:, 1:2] + t1c
-                v2 = delta[:, 2:3] + t2c
-                p01 = v1 > v0
-                m01 = np.where(p01, v1, v0)
-                best_prev = np.where(v2 > m01, 2, p01)
-                best_score = np.maximum(m01, v2)
-                new_delta = best_score + em[:, t, :]
-                alive = (active_len > t)[:, None]
-                delta = np.where(alive, new_delta, delta)
-                psi[:, t, :] = best_prev
-        else:
-            for t in range(1, Tmax):
-                cand = delta[:, :, None] + transT[None, :, :]  # (S, L, L)
-                best_prev = cand.argmax(axis=1)  # (S, L)
-                best_score = np.take_along_axis(cand, best_prev[:, None, :], axis=1)[:, 0, :]
-                new_delta = best_score + em[:, t, :]
-                alive = (active_len > t)[:, None]
-                delta = np.where(alive, new_delta, delta)
-                psi[:, t, :] = best_prev
+        # unrolled 3-label max (N_LABELS is 3; load rejects other shapes):
+        # cand[s,i,j] = delta[s,i] + trans[i,j], with argmax's first-max
+        # tie-break reproduced by strict > comparisons (lower prev index
+        # wins ties)
+        t0c, t1c, t2c = transT[0], transT[1], transT[2]
+        for t in range(1, Tmax):
+            v0 = delta[:, 0:1] + t0c
+            v1 = delta[:, 1:2] + t1c
+            v2 = delta[:, 2:3] + t2c
+            p01 = v1 > v0
+            m01 = np.where(p01, v1, v0)
+            best_prev = np.where(v2 > m01, 2, p01)
+            best_score = np.maximum(m01, v2)
+            new_delta = best_score + em[:, t, :]
+            alive = (active_len > t)[:, None]
+            delta = np.where(alive, new_delta, delta)
+            psi[:, t, :] = best_prev
         last = delta.argmax(axis=1)  # (S,)
         # backtrack (vectorized across the bucket)
         labels_pad = np.zeros((S, Tmax), dtype=np.int64)

@@ -152,7 +152,9 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
     u_ws = uniq_ser.isin(_WS_TOKENS).to_numpy(dtype=bool)
     alph, A, root_child, trans_index, trie_children, trie_is_end = flatten_trie(trie)
     u_alph = alph.get_indexer(uniq_arr).astype(np.int64)
-    u_first = np.where(u_alph >= 0, root_child[np.maximum(u_alph, 0)], -1)
+    # alphabet id -1 (token on no trie edge) reads the appended "no child"
+    # entry, which also covers an empty gazetteer (A == 0, no descent)
+    u_first = np.append(root_child, -1)[u_alph]
     first_child = u_first[tok_codes]
     cand_idx = np.flatnonzero(first_child >= 0)
     if len(cand_idx):

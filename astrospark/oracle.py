@@ -176,7 +176,17 @@ def label_sequence(tokens: list[str], vocab: frozenset, trie: dict, model: CrfMo
         return [], []
 
     cols_per_tok = [scalar_columns(w, a, p) for w, (a, p) in zip(words, flags)]
-    T = len(eligible)
+    emit = scalar_emissions(cols_per_tok, model)
+    labels = viterbi_single(emit, model.trans.astype(np.float64))
+    return eligible, labels.tolist()
+
+
+def scalar_emissions(cols_per_tok: list[list[str]], model: CrfModel) -> np.ndarray:
+    """(T, L) float64 emission scores of ONE sequence, given its per-token
+    feature columns (scalar_columns): every template value is built as a
+    plain string (compound values SEP-joined, BOUNDARY outside the
+    sequence) and probed in the vocab dict."""
+    T = len(cols_per_tok)
     n_labels = len(model.trans)
     emit = np.zeros((T, n_labels), dtype=np.float64)
     # accumulation follows templates.EVAL_PLAN — offset-grouped singles sum
@@ -210,8 +220,7 @@ def label_sequence(tokens: list[str], vocab: frozenset, trie: dict, model: CrfMo
                 val = SEP.join(parts)
             row = model.vocabs[k].get(val, len(model.vocabs[k]))
             emit[t] += model.weights[k][row]
-    labels = viterbi_single(emit, model.trans.astype(np.float64))
-    return eligible, labels.tolist()
+    return emit
 
 
 # ---------------------------------------------------------------------------

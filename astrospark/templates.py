@@ -104,8 +104,8 @@ N_LABELS = 3
 BOUNDARY = "\x00B"
 
 # column 17 is the FastMatcher interval flag — the only feature column
-# that is NOT a function of the token string (it is positional), so it is
-# excluded from the shared-unique-token emission fast path
+# that is NOT a function of the token string (it is positional), so the
+# kernel passes it per position rather than per distinct token
 INTERVAL_COL = 17
 
 

@@ -5,7 +5,9 @@ import pandas as pd
 import pytest
 
 from astrospark.crf import (
+    SEP,
     CrfModel,
+    build_vocabs,
     shift_codes,
     shift_within_sequences,
     template_values,
@@ -13,7 +15,7 @@ from astrospark.crf import (
     viterbi_single,
 )
 from astrospark.features import compute_columns
-from astrospark.oracle import scalar_columns
+from astrospark.oracle import scalar_columns, scalar_emissions
 from astrospark.templates import BOUNDARY, N_LABELS, TEMPLATES
 
 TOKENS = [
@@ -63,17 +65,45 @@ def test_viterbi_batched_matches_single():
         pos += T
 
 
+def _kernel_inputs(seqs, astro, rng):
+    """The kernel's emission inputs for token sequences ``seqs``: per
+    distinct token columns 0-16 sharing one codes array, plus a random
+    per-position interval column. Also returns the per-position scalar
+    columns (oracle.scalar_columns)."""
+    toks = np.array([t for s in seqs for t in s], dtype=object)
+    seq_ids = np.repeat(np.arange(len(seqs)), [len(s) for s in seqs])
+    interval = rng.random(len(toks)) < 0.3
+    codes, uniq = pd.factorize(toks)
+    ucols = compute_columns(
+        pd.Series(uniq, dtype="object"), np.array([u in astro for u in uniq]), None
+    )
+    cols = [(ucols[c], codes) for c in range(17)]
+    cols.append(np.where(interval, "1", "0"))
+    scalar = [scalar_columns(t, t in astro, bool(p)) for t, p in zip(toks, interval)]
+    return cols, seq_ids, scalar
+
+
+def _scalar_reference(scalar, seq_ids, model):
+    """oracle.scalar_emissions run sequence by sequence."""
+    return np.concatenate(
+        [
+            scalar_emissions([scalar[i] for i in np.flatnonzero(seq_ids == s)], model)
+            for s in np.unique(seq_ids)
+        ]
+    )
+
+
 def test_emissions_fast_path_matches_template_values(artifacts):
     """The factorized LUT scorer must equal the string-join scorer."""
     _, _, model = artifacts
     rng = np.random.default_rng(2)
     toks = [TOKENS[i] for i in rng.integers(0, len(TOKENS), size=60)]
-    an = rng.random(60) < 0.3
-    ia = rng.random(60) < 0.3
-    cols = compute_columns(pd.Series(toks, dtype="object"), an, ia)
-    seq_ids = np.sort(rng.integers(0, 5, size=60))
+    lens = np.bincount(np.sort(rng.integers(0, 5, size=60)), minlength=5)
+    seqs = np.split(np.array(toks, dtype=object), np.cumsum(lens)[:-1])
+    cols, seq_ids, _ = _kernel_inputs(seqs, {"GRB", "NGC", "x"}, rng)
     fast = model.emissions(cols, seq_ids)
-    values = template_values(cols, seq_ids)
+    full = [np.asarray(vals, dtype=object)[codes] for vals, codes in cols[:17]]
+    values = template_values(full + [cols[17]], seq_ids)
     slow = np.zeros_like(fast)
     for k, vals in enumerate(values):
         vocab, w = model.vocabs[k], model.weights[k]
@@ -94,40 +124,125 @@ def test_model_artifact_roundtrip(tmp_path, artifacts):
         assert np.allclose(a, b)
 
 
-def test_compound_int_path_matches_string_path(artifacts):
-    """The mixed-radix integer compound probe must be bit-identical to the
-    string-join probe, including the NaN→boundary factorize quirk and the
-    SEP-bearing-token fallback."""
-    _, _, model = artifacts
-    assert model._compound_tables() is not None  # shipped vocabs decompose
-    rng = np.random.default_rng(3)
-    n = 80
-    toks = np.array(["alpha", "beta", "NGC", "1275", "SDSS"], dtype=object)
-    col0 = toks[rng.integers(0, len(toks), n)].astype(object)
-    col0[7] = np.nan  # factorize code -1: boundary on both paths
-    cols = [col0] + [np.array(["x"] * n, dtype=object) for _ in range(17)]
-    seq = np.zeros(n, dtype=np.int64)
-    seq[40:] = 1
-    e_int = model.emissions(cols, seq)
-    model._ctab = False
-    try:
-        e_str = model.emissions(cols, seq)
-    finally:
-        model._ctab = None
-    assert np.array_equal(e_int, e_str)
+SEP_TOKENS = ("a\x1fb", "\x1f", "NGC\x1f1275", "x\x1f", "1275")
 
-    # a SEP inside a token makes join-equality ambiguous — the scorer must
-    # fall back to the string path (and therefore stay equal to it)
-    col0_sep = col0.copy()
-    col0_sep[3] = "a\x1fb"
-    cols[0] = col0_sep
-    e_int2 = model.emissions(cols, seq)
-    model._ctab = False
-    try:
-        e_str2 = model.emissions(cols, seq)
-    finally:
-        model._ctab = None
-    assert np.array_equal(e_int2, e_str2)
+
+def _trigram_seqs(model, rng, n_seqs, extra=SEP_TOKENS):
+    """Token sequences built from the shipped trigram vocab's keys, so the
+    compound templates hit real rows, with SEP-bearing tokens mixed in and
+    sequences of length 1-2 (shorter than the compound padding)."""
+    k = next(k for k, (name, _s) in enumerate(TEMPLATES) if name == "U0E_a")
+    grams = [key.split(SEP) for key in list(model.vocabs[k])[:400]]
+    grams = [[t for t in g if t != BOUNDARY] for g in grams]
+    seqs = []
+    for i in range(n_seqs):
+        if i % 7 == 0:
+            seqs.append([extra[int(rng.integers(0, len(extra)))]])
+            continue
+        s = []
+        for _ in range(int(rng.integers(1, 6))):
+            if rng.random() < 0.15:
+                s.append(extra[int(rng.integers(0, len(extra)))])
+            else:
+                s.extend(grams[int(rng.integers(0, len(grams)))])
+        seqs.append(s[: int(rng.integers(1, 3))] if i % 5 == 0 else s)
+    return [s for s in seqs if s]
+
+
+def test_emissions_match_scalar_oracle(artifacts):
+    """The integer emission path is array-equal to the oracle's string
+    probes on multi-sequence batches: length-1 sequences, sequences
+    shorter than the compound padding, and SEP-bearing tokens (a SEP
+    inside a component scores OOV on both sides)."""
+    vocab, _, model = artifacts
+    rng = np.random.default_rng(3)
+    for _ in range(5):
+        seqs = _trigram_seqs(model, rng, 60)
+        cols, seq_ids, scalar = _kernel_inputs(seqs, vocab, rng)
+        got = model.emissions(cols, seq_ids)
+        assert np.array_equal(got, _scalar_reference(scalar, seq_ids, model))
+
+
+@pytest.fixture
+def wide_templates(monkeypatch):
+    """TEMPLATES plus compounds beyond the shipped templates' reach of 2
+    and a mixed-column compound; EVAL_PLAN rebuilt and patched wherever it
+    is imported. With a fixed padding of 2 per side, adjacent sequences
+    still leave 4 boundary slots between them, so (-3, -2) alone reads
+    right by luck; (-5, -4) reaches the previous sequence's last token."""
+    from astrospark import crf, oracle, templates
+
+    wide = TEMPLATES + (
+        ("UX0", ((-3, 0), (-2, 0))),
+        ("UX1", ((-1, 0), (1, 12))),
+        ("UX2", ((-5, 0), (-4, 0))),
+    )
+    monkeypatch.setattr(templates, "TEMPLATES", wide)
+    plan = templates._build_eval_plan()
+    for mod in (templates, crf, oracle):
+        monkeypatch.setattr(mod, "TEMPLATES", wide)
+        monkeypatch.setattr(mod, "EVAL_PLAN", plan)
+    return wide
+
+
+def test_emissions_out_of_range_compound_offsets(artifacts, wide_templates):
+    """A compound reaching further than the shipped ones reads inside its
+    own sequence or the boundary, never a neighbour: the padding follows
+    the templates' largest |d|."""
+    vocab, _, shipped = artifacts
+    rng = np.random.default_rng(4)
+    # SEP-free tokens: training keys must split into SEP-free parts (see
+    # _compound_tables); SEP-bearing batches are covered above
+    train = _trigram_seqs(shipped, rng, 200, extra=("1275", "x"))
+    cols, seq_ids, _ = _kernel_inputs(train, vocab, rng)
+    full = [np.asarray(vals, dtype=object)[codes] for vals, codes in cols[:17]]
+    vocabs = build_vocabs([template_values(full + [cols[17]], seq_ids)])
+    weights = []
+    for v in vocabs:
+        w = rng.normal(size=(len(v) + 1, N_LABELS)).astype(np.float32)
+        w[-1] = 0.0
+        weights.append(w)
+    model = CrfModel(vocabs, weights, rng.normal(size=(N_LABELS, N_LABELS)))
+    for _ in range(3):
+        seqs = _trigram_seqs(shipped, rng, 80, extra=("1275", "x"))
+        cols, seq_ids, scalar = _kernel_inputs(seqs, vocab, rng)
+        got = model.emissions(cols, seq_ids)
+        assert np.array_equal(got, _scalar_reference(scalar, seq_ids, model))
+
+
+def test_compound_tables_reject_undecomposable_and_overflowing_keys(monkeypatch):
+    from astrospark import crf
+
+    def model_with(templates, key):
+        vocabs = [{} for _ in templates]
+        vocabs[-1] = {key: 0}
+        weights = [np.zeros((len(v) + 1, N_LABELS), dtype=np.float32) for v in vocabs]
+        monkeypatch.setattr(crf, "TEMPLATES", templates)
+        return CrfModel(vocabs, weights, np.zeros((N_LABELS, N_LABELS)))
+
+    bigram = TEMPLATES + (("UX0", ((0, 0), (1, 0))),)
+    with pytest.raises(ValueError, match="SEP-free"):
+        model_with(bigram, "a" + SEP + "b" + SEP + "c")._compound_tables()
+    # 8 components (7 letters + BOUNDARY) → B = 9, and 9**22 > 2**63
+    long_gram = TEMPLATES + (("UX0", tuple((d, 0) for d in range(22))),)
+    key = SEP.join("abcdefg"[i % 7] for i in range(22))
+    with pytest.raises(ValueError, match="overflow"):
+        model_with(long_gram, key)._compound_tables()
+
+
+def test_load_rejects_wrong_label_count(tmp_path, artifacts):
+    _, _, model = artifacts
+    p = str(tmp_path / "w.npz")
+    model.save(p)
+    arrays = dict(np.load(p))
+    for name, bad in (
+        ("trans", np.zeros((4, 4), dtype=np.float32)),
+        ("w_0", np.zeros((len(arrays["vals_0"]) + 1, 2), dtype=np.float32)),
+    ):
+        q = str(tmp_path / f"bad_{name}.npz")
+        np.savez(q, **dict(arrays, **{name: bad}))
+        with pytest.raises(ValueError, match="shape"):
+            CrfModel.load(q)
 
 
 def test_viterbi_unrolled_tie_breaks_match_scalar():

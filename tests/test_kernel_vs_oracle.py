@@ -27,6 +27,10 @@ ADVERSARIAL = [
     "NGC 1275\tM 31",
     "–—―NGC 300―—–",
     "entity at very end GRB 021004",
+    # SEP (the compound-template separator) inside tokens
+    "NGC\x1f1275 near GRB 020819B\x1f",
+    "\x1f M 31 \x1f",
+    "a\x1fb NGC 1275 \x1f\x1f GRB 030329",
 ]
 
 
@@ -38,8 +42,9 @@ def _rows(df: pd.DataFrame, doc_id: str):
     ]
 
 
-def _check(docs, artifacts):
-    vocab, trie, model = artifacts
+def _check(docs, artifacts, trie=None):
+    vocab, shipped_trie, model = artifacts
+    trie = shipped_trie if trie is None else trie
     pdf = pd.DataFrame(
         {"doc_id": [d["doc_id"] for d in docs], "spans": [d["spans"] for d in docs]}
     )
@@ -47,6 +52,7 @@ def _check(docs, artifacts):
     for d in docs:
         exp = process_document(d["spans"], vocab, trie, model)
         assert _rows(out, d["doc_id"]) == exp, d["doc_id"]
+    return out
 
 
 def test_fixture_docs_match_oracle(artifacts):
@@ -59,6 +65,16 @@ def test_adversarial_text_chunks(artifacts):
         for i, t in enumerate(ADVERSARIAL)
     ]
     _check(docs, artifacts)
+
+
+def test_empty_gazetteer_matches_oracle(artifacts):
+    """No gazetteer entries: no interval flags, no trie descent; the CRF
+    still labels objects."""
+    docs = make_docs(40, seed=5, skew_every=20) + [
+        {"doc_id": "e0", "spans": [{"kind": "text", "text": "We detect GRB 020819B near NGC 1275.", "media_ref": "", "offset": 0}]}
+    ]
+    out = _check(docs, artifacts, trie={})
+    assert (out[out.doc_id == "e0"].kind == "object").sum() == 2
 
 
 def test_adversarial_line_chunks(artifacts):
