@@ -58,18 +58,19 @@ class AstroEngine:
         """One string → ordered span dicts (the /processAstroText shape).
         Runs the kernel directly on a 1-doc batch — a service endpoint
         should not pay a Spark job per request."""
-        import pandas as pd
+        import pyarrow as pa
 
-        from astrospark.kernel import extract_batch
+        from astrospark.kernel import DOCS_SCHEMA, extract_batch
 
         vocab, trie, model = self.artifacts
-        pdf = pd.DataFrame(
+        batch = pa.RecordBatch.from_pydict(
             {
                 "doc_id": ["_request"],
                 "spans": [[{"kind": "text", "text": text, "media_ref": "", "offset": 0}]],
-            }
+            },
+            schema=DOCS_SCHEMA,
         )
-        out = extract_batch(pdf, vocab, trie, model)
+        out = extract_batch(batch, vocab, trie, model)
         return [
             {
                 "seq": int(r.seq),

@@ -14,11 +14,11 @@ label sequence y is sum_t emit[t, y_t] + sum_{t>0} T[y_{t-1}, y_t].
 
 Scoring has one integer path (CrfModel.emissions), taking the kernel's
 column form: token-derived columns per distinct batch token plus one shared
-token-codes array, and the positional interval column. Single-column
-templates probe their vocab once per distinct value and reach all positions
-with one gather per offset; compound templates probe by mixed-radix int64
-component-id keys read from one factorized p-gram array per relative
-pattern. The reference for all of it is the scalar oracle
+token-codes array, and the positional interval column's own 0/1 codes.
+Single-column templates probe their vocab once per distinct value and reach
+all positions with one gather per offset; compound templates probe by
+mixed-radix int64 component-id keys read from one factorized p-gram array
+per relative pattern. The reference for all of it is the scalar oracle
 (oracle.scalar_emissions), which probes the vocab dicts with plain strings.
 
 The shipped weights artifact (resources/weights.npz) is trained here with a
@@ -36,7 +36,7 @@ import functools
 import numpy as np
 import pandas as pd
 
-from astrospark.templates import BOUNDARY, EVAL_PLAN, INTERVAL_COL, N_LABELS, TEMPLATES
+from astrospark.templates import BOUNDARY, EVAL_PLAN, N_LABELS, TEMPLATES
 
 # ---------------------------------------------------------------------------
 # template value construction (vectorized)
@@ -222,11 +222,10 @@ class CrfModel:
         """(n, L) float64 emission scores for a batch of concatenated
         sequences (``seq_ids`` grouped: each sequence contiguous).
 
-        ``cols`` is the kernel's form: entries 0-16 are ``(values, codes)``
-        pairs sharing ONE ``codes`` array, where ``values`` holds the
-        column's value per distinct batch token and the value at position t
-        is ``values[codes[t]]``; entry 17 (INTERVAL_COL) is the per-position
-        interval flag, factorized here into the same pair form.
+        ``cols`` is the kernel's form: all 18 entries are ``(values, codes)``
+        pairs and the value at position t is ``values[codes[t]]``. Entries
+        0-16 share ONE ``codes`` array over the distinct batch tokens;
+        entry 17 (INTERVAL_COL) is ``(["0", "1"], flag per position)``.
 
         Accumulation follows ``templates.EVAL_PLAN`` in float64, the order
         the scalar oracle (oracle.scalar_emissions) uses, so both agree bit
@@ -253,10 +252,7 @@ class CrfModel:
         # one reusable gather buffer: per-template temporaries were ~45% of
         # the scoring time (malloc + page faults)
         tmp = np.empty((n, N_LABELS), dtype=np.float64)
-        token_codes = np.asarray(cols[0][1], dtype=np.int64)
-        icodes, ivals = pd.factorize(cols[INTERVAL_COL])
-        columns = [(values, token_codes) for values, _codes in cols[:INTERVAL_COL]]
-        columns.append((ivals, icodes.astype(np.int64)))
+        columns = [(values, np.asarray(codes, dtype=np.int64)) for values, codes in cols]
 
         @functools.cache
         def distinct_values(c: int) -> tuple[np.ndarray, np.ndarray]:
@@ -348,73 +344,68 @@ def viterbi_single(emit: np.ndarray, trans: np.ndarray) -> np.ndarray:
     return labels
 
 
-def viterbi_batched(emit: np.ndarray, seq_ids: np.ndarray, trans: np.ndarray,
-                    bucket_size: int = 512) -> np.ndarray:
-    """Decode all sequences in a concatenated batch.
+def viterbi_batched(emit: np.ndarray, seq_ids: np.ndarray, trans: np.ndarray) -> np.ndarray:
+    """Decode all sequences in a concatenated batch, time-major.
 
-    Sequences are bucketed by length (after sorting) so padding waste stays
-    bounded even with heavy document-length skew; within a bucket the DP runs
-    as (S, L) numpy ops per time-step — python loops scale with max sequence
-    length, not token count.
+    Sequences are ordered longest first and their emissions gathered once
+    into a flat time-major array: step t holds one row per sequence longer
+    than t, so the sequences still active at t are always a prefix. Each
+    forward and backtrack step is one set of numpy ops over that prefix —
+    python loops scale with the longest sequence, not with token or
+    sequence count — and the labels go back in one scatter.
     """
     n = len(seq_ids)
     if n == 0:
         return np.empty(0, dtype=np.int64)
     # sequence boundaries (seq_ids grouped)
-    change = np.flatnonzero(np.diff(seq_ids)) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [n]))
-    lengths = ends - starts
-    order = np.argsort(lengths, kind="stable")
+    new_seq = np.ones(n, dtype=bool)
+    new_seq[1:] = seq_ids[1:] != seq_ids[:-1]
+    starts = np.flatnonzero(new_seq)
+    lengths = np.diff(np.append(starts, n))
+    order = np.argsort(-lengths, kind="stable")  # longest first
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order))
+    ls = lengths[order]
+    Tmax = int(ls[0])
+    # active[t] = #sequences longer than t; step t's rows start at row_off[t]
+    active = np.searchsorted(-ls, -np.arange(Tmax), side="left")
+    row_off = np.concatenate(([0], np.cumsum(active)))
+    seq = np.cumsum(new_seq) - 1
+    t_of = np.arange(n) - starts[seq]
+    dst = row_off[t_of] + rank[seq]  # time-major row of each token
+    em = np.empty((n, N_LABELS), dtype=np.float64)  # f64, same as viterbi_single
+    em[dst] = emit
 
-    out = np.empty(n, dtype=np.int64)
-    transT = trans.astype(np.float64)  # f64 accumulation, same as viterbi_single
+    # forward pass; a finished sequence keeps its last delta (it sits past
+    # the active prefix). Unrolled 3-label max (N_LABELS is 3; load rejects
+    # other shapes): cand[s,i,j] = delta[s,i] + trans[i,j], with argmax's
+    # first-max tie-break reproduced by strict > comparisons (lower prev
+    # index wins ties)
+    t0c, t1c, t2c = trans.astype(np.float64)
+    delta = em[: active[0]].copy()
+    psi = np.empty((n, N_LABELS), dtype=np.int8)
+    for t in range(1, Tmax):
+        k, r0 = active[t], row_off[t]
+        d = delta[:k]
+        v0 = d[:, 0:1] + t0c
+        v1 = d[:, 1:2] + t1c
+        v2 = d[:, 2:3] + t2c
+        p01 = v1 > v0
+        m01 = np.where(p01, v1, v0)
+        psi[r0 : r0 + k] = np.where(v2 > m01, 2, p01)
+        np.maximum(m01, v2, out=d)
+        d += em[r0 : r0 + k]
 
-    for b0 in range(0, len(order), bucket_size):
-        idx = order[b0 : b0 + bucket_size]
-        ls = lengths[idx]
-        S = len(idx)
-        Tmax = int(ls.max())
-        # gather into (S, Tmax, L) padded tensor
-        em = np.zeros((S, Tmax, N_LABELS), dtype=np.float64)
-        for si, qi in enumerate(idx):
-            em[si, : lengths[qi]] = emit[starts[qi] : ends[qi]]
-        delta = em[:, 0, :].copy()  # (S, L)
-        psi = np.zeros((S, Tmax, N_LABELS), dtype=np.int8)
-        active_len = ls
-        # unrolled 3-label max (N_LABELS is 3; load rejects other shapes):
-        # cand[s,i,j] = delta[s,i] + trans[i,j], with argmax's first-max
-        # tie-break reproduced by strict > comparisons (lower prev index
-        # wins ties)
-        t0c, t1c, t2c = transT[0], transT[1], transT[2]
-        for t in range(1, Tmax):
-            v0 = delta[:, 0:1] + t0c
-            v1 = delta[:, 1:2] + t1c
-            v2 = delta[:, 2:3] + t2c
-            p01 = v1 > v0
-            m01 = np.where(p01, v1, v0)
-            best_prev = np.where(v2 > m01, 2, p01)
-            best_score = np.maximum(m01, v2)
-            new_delta = best_score + em[:, t, :]
-            alive = (active_len > t)[:, None]
-            delta = np.where(alive, new_delta, delta)
-            psi[:, t, :] = best_prev
-        last = delta.argmax(axis=1)  # (S,)
-        # backtrack (vectorized across the bucket)
-        labels_pad = np.zeros((S, Tmax), dtype=np.int64)
-        cur = last
-        t_idx = ls - 1
-        labels_pad[np.arange(S), t_idx] = cur
-        for t in range(Tmax - 1, 0, -1):
-            active = t_idx >= t
-            prev = psi[np.arange(S), t, cur]
-            cur = np.where(active, prev, cur)
-            pos = t - 1
-            write = active
-            labels_pad[np.arange(S)[write], pos] = cur[write]
-        for si, qi in enumerate(idx):
-            out[starts[qi] : ends[qi]] = labels_pad[si, : lengths[qi]]
-    return out
+    # backtrack: each sequence starts from its argmax at its own last step
+    cur = delta.argmax(axis=1)
+    out_tm = np.empty(n, dtype=np.int64)
+    for t in range(Tmax - 1, 0, -1):
+        k, r0 = active[t], row_off[t]
+        c = cur[:k]
+        out_tm[r0 : r0 + k] = c
+        cur[:k] = psi[r0 + np.arange(k), c]
+    out_tm[: active[0]] = cur
+    return out_tm[dst]
 
 
 # ---------------------------------------------------------------------------

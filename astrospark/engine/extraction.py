@@ -4,7 +4,7 @@ Physical plan (mirrors SURVEY.md §3.1's Spark rendition):
 
   scan(docs) → [salted repartition on doc_id]
              → [skew split: giant docs exploded into per-chunk rows]
-             → mapInPandas(extract_batch)      # the ONLY process boundary
+             → mapInArrow(extract_batch)       # the ONLY process boundary
              → [window re-rank for split docs only]
              → sink
 
@@ -26,13 +26,14 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# kernel emits an internal exclusive char-end used for exact re-ranking of
-# split documents; the engine drops it from the public output
+# kernel.OUTPUT_SCHEMA as DDL: the kernel emits an internal exclusive
+# char-end used for exact re-ranking of split documents; the engine drops
+# it from the public output
 KERNEL_SCHEMA = (
     "doc_id string, seq int, kind string, text string, media_ref string, "
     "offset int, end int"
@@ -89,15 +90,18 @@ def _get_artifacts(bcast):
 
 
 def make_extractor(bcast):
-    """mapInPandas function closure over the broadcast artifacts."""
+    """mapInArrow function closure over the broadcast artifacts: each
+    docs RecordBatch goes to the kernel as is, and its rows come back as
+    one RecordBatch of KERNEL_SCHEMA."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from astrospark.kernel import extract_batch
+    def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from astrospark.kernel import OUTPUT_SCHEMA, extract_batch
 
         vocab, trie, model = _get_artifacts(bcast)
-        for pdf in batches:
-            if len(pdf):
-                yield extract_batch(pdf, vocab, trie, model)
+        for batch in batches:
+            if batch.num_rows:
+                out = extract_batch(batch, vocab, trie, model)
+                yield pa.RecordBatch.from_pandas(out, schema=OUTPUT_SCHEMA, preserve_index=False)
 
     return extract
 
@@ -150,7 +154,7 @@ def extract_spans(
     small_out = (
         salted.repartition(n_partitions, F.col("doc_id"), F.col("_salt"))
         .drop("_salt")
-        .mapInPandas(extractor, schema=KERNEL_SCHEMA)
+        .mapInArrow(extractor, schema=KERNEL_SCHEMA)
     )
     if big is None:
         return small_out.select(*OUTPUT_COLUMNS)
@@ -162,7 +166,7 @@ def extract_spans(
     big_chunks = big.select(
         "doc_id", F.posexplode("spans").alias("_chunk_pos", "_span")
     ).select("doc_id", F.array("_span").alias("spans"))
-    big_raw = big_chunks.repartition(n_partitions).mapInPandas(
+    big_raw = big_chunks.repartition(n_partitions).mapInArrow(
         extractor, schema=KERNEL_SCHEMA
     )
     w = Window.partitionBy("doc_id").orderBy(

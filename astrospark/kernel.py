@@ -1,14 +1,15 @@
 """Vectorized extraction kernel — the Arrow-batch hot path for Spark.
 
-Processes a whole pandas batch of interleaved documents at once:
-tokenization via one vectorized megastring pass with arrow-side dedup
-(analyzer.tokenize_spans), feature
-columns via pandas str ops, emission scoring via per-template id maps +
-dense weight-table gathers, Viterbi batched across every sequence in the
-batch, and cluster/offset assembly from cumulative-sum char positions.
-Per-document Python is limited to chunk bookkeeping and a per-CLUSTER
-(not per-token) offset walk that replicates the reference's pos
-arithmetic (/root/reference/src/main/java/org/grobid/core/engines/AstroParser.java:677-748),
+Processes a whole Arrow RecordBatch of interleaved documents at once:
+processing units are cut from the spans' list offsets and struct children
+with pyarrow.compute (no per-span Python), tokenization runs as one
+vectorized megastring pass with arrow-side dedup (analyzer.tokenize_spans),
+feature columns via pandas str ops, emission scoring via per-template id
+maps + dense weight-table gathers, Viterbi batched across every sequence in
+the batch, and cluster/offset assembly from cumulative-sum char positions;
+output rows are ordered by one Arrow sort. Per-document Python is limited
+to a per-CLUSTER (not per-token) offset walk that replicates the
+reference's pos arithmetic (grobid-astro AstroParser.java:677-748),
 including its quirks (leading-space double-advance, one-shot trailing
 trims) — fuzz-checked token-for-token against the scalar oracle
 (oracle.py) in tests/test_kernel_vs_oracle.py.
@@ -24,20 +25,36 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from astrospark.analyzer import tokenize_spans
 from astrospark.crf import CrfModel, viterbi_batched
 from astrospark.features import compute_columns
 from astrospark.lexicon import _WS_TOKENS, flatten_trie
-from astrospark.oracle import LINE_KINDS, TEXT_KINDS, is_blank, java_trim
+from astrospark.oracle import LINE_KINDS, TEXT_KINDS
 from astrospark.templates import LABEL_BEGIN, LABEL_OTHER
 from astrospark.unicode_norm import NORMALIZE_TABLE
 
+_STR, _INT = pa.string(), pa.int32()
+# the docs table (io.sources.DOCS_SCHEMA_DDL) as the kernel's Arrow input
+_SPAN = pa.struct([("kind", _STR), ("text", _STR), ("media_ref", _STR), ("offset", _INT)])
+DOCS_SCHEMA = pa.schema([("doc_id", _STR), ("spans", pa.list_(_SPAN))])
 # `end` (exclusive char end) is internal: the engine uses it to re-rank
 # split-document output exactly like the in-batch sort, then drops it.
-OUTPUT_COLUMNS = ("doc_id", "seq", "kind", "text", "media_ref", "offset", "end")
+OUTPUT_SCHEMA = pa.schema(
+    [("doc_id", _STR), ("seq", _INT), ("kind", _STR), ("text", _STR),
+     ("media_ref", _STR), ("offset", _INT), ("end", _INT)]
+)
+OUTPUT_COLUMNS = tuple(OUTPUT_SCHEMA.names)
+# ordering invariant: (offset, offset_end) per AstroEntity.compareTo with
+# deterministic tie-breaks; seq = dense rank within doc (oracle.py)
+_ORDER_KEYS = [(k, "ascending") for k in ("di", "offset", "end", "kind", "text", "media_ref")]
 
-_CTRL_EMPTY = None  # lazily compiled fullmatch for control-only strings
+_TEXT_KINDS = pa.array(sorted(TEXT_KINDS))
+_LINE_KINDS = pa.array(sorted(LINE_KINDS))
+# java String.trim() strips every char <= 0x20 (oracle.java_trim)
+_JAVA_TRIM_CHARS = "".join(map(chr, range(0x21)))
 
 
 def _control_only_mask(norm: pd.Series) -> np.ndarray:
@@ -45,73 +62,107 @@ def _control_only_mask(norm: pd.Series) -> np.ndarray:
     return norm.str.fullmatch("[\\x00-\\x20]*").to_numpy()
 
 
-def extract_batch(pdf: pd.DataFrame, vocab, trie, model: CrfModel) -> pd.DataFrame:
-    """doc_id + spans batch → ordered output span rows (see OUTPUT_COLUMNS)."""
-    passthrough: list[tuple[int, str, str, str, int, int]] = []
-    # processing units: (doc_idx, base_offset) per unit, texts list
-    unit_doc: list[int] = []
-    unit_base: list[int] = []
-    unit_texts: list[str] = []
-
-    docs = pdf["doc_id"].to_numpy()
-    for di, spans in enumerate(pdf["spans"].to_numpy()):
-        if spans is None:
-            continue
-        for span in spans:
-            kind = span["kind"]
-            text = span["text"] or ""
-            offset = int(span["offset"])
-            if kind in TEXT_KINDS:
-                if is_blank(text):
-                    continue
-                unit_doc.append(di)
-                unit_base.append(offset)
-                unit_texts.append(text.replace("\n", " ").replace("\t", " "))
-            elif kind in LINE_KINDS:
-                # split on '\n' — token-stream-equivalent (see module doc)
-                pos = 0
-                for line in text.split("\n"):
-                    if line:
-                        unit_doc.append(di)
-                        unit_base.append(offset + pos)
-                        unit_texts.append(line)
-                    pos += len(line) + 1
-            else:
-                passthrough.append(
-                    (di, kind, text, span["media_ref"] or "", offset, offset)
-                )
-
-    ent_rows: list[tuple[int, str, str, str, int, int]] = []
-    if unit_texts:
-        ent_rows = _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model)
-
-    all_rows = passthrough + ent_rows
-    if not all_rows:
-        return pd.DataFrame(
-            {
-                "doc_id": pd.Series([], dtype="object"),
-                "seq": pd.Series([], dtype="int32"),
-                "kind": pd.Series([], dtype="object"),
-                "text": pd.Series([], dtype="object"),
-                "media_ref": pd.Series([], dtype="object"),
-                "offset": pd.Series([], dtype="int32"),
-                "end": pd.Series([], dtype="int32"),
-            }
-        )
-    out = pd.DataFrame(all_rows, columns=["di", "kind", "text", "media_ref", "offset", "end"])
-    # ordering invariant: (offset, offset_end) per AstroEntity.compareTo with
-    # deterministic tie-breaks; seq = dense rank within doc (oracle.py)
-    out.sort_values(["di", "offset", "end", "kind", "text", "media_ref"], inplace=True, kind="stable")
-    out["seq"] = out.groupby("di").cumcount().astype("int32")
-    out["doc_id"] = docs[out["di"].to_numpy()]
-    out["offset"] = out["offset"].astype("int32")
-    out["end"] = out["end"].astype("int32")
-    return out[list(OUTPUT_COLUMNS)].reset_index(drop=True)
+def _to_numpy(arr: pa.Array) -> np.ndarray:
+    """Arrow array → numpy (bool masks, object arrays of str)."""
+    return arr.to_numpy(zero_copy_only=False)
 
 
-def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
+def extract_batch(batch, vocab, trie, model: CrfModel) -> pd.DataFrame:
+    """doc_id + spans batch → ordered output span rows (see OUTPUT_COLUMNS).
+
+    ``batch`` is a ``pa.RecordBatch`` of DOCS_SCHEMA; a pandas frame of the
+    same columns is converted to one first."""
+    if isinstance(batch, pd.DataFrame):
+        batch = pa.RecordBatch.from_pandas(batch, schema=DOCS_SCHEMA, preserve_index=False)
+    spans = batch.column("spans")
+    flat = spans.flatten()  # one struct per span, in span order
+    fields = dict(zip((f.name for f in flat.type), flat.flatten()))
+    kind = fields["kind"]
+    text = fields["text"].fill_null("")
+    media_ref = fields["media_ref"].fill_null("")
+    offset = fields["offset"].fill_null(0).to_numpy().astype(np.int64)
+    span_doc = pc.list_parent_indices(spans).to_numpy().astype(np.int64)
+
+    # text kinds: one unit per non-blank span (commons-lang isBlank), with
+    # '\n' and '\t' read as spaces
+    is_text = _to_numpy(pc.is_in(kind, value_set=_TEXT_KINDS))
+    is_line = _to_numpy(pc.is_in(kind, value_set=_LINE_KINDS))
+    t_idx = np.flatnonzero(is_text)
+    t_text = text.take(t_idx)
+    blank = pc.or_(pc.equal(pc.utf8_length(t_text), 0), pc.utf8_is_space(t_text))
+    keep = ~_to_numpy(blank)
+    t_idx = t_idx[keep]
+    t_text = t_text.filter(pa.array(keep))
+    t_text = pc.replace_substring(pc.replace_substring(t_text, "\n", " "), "\t", " ")
+    # line kinds: one unit per non-empty '\n'-split line — token-stream-
+    # equivalent (see module doc) — at the line's char position in its span
+    l_idx = np.flatnonzero(is_line)
+    lines = pc.split_pattern(text.take(l_idx), "\n")
+    line_text = lines.flatten()
+    line_span = pc.list_parent_indices(lines).to_numpy()
+    step = pc.utf8_length(line_text).to_numpy().astype(np.int64) + 1
+    line_pos = np.cumsum(step) - step
+    line_pos -= line_pos[lines.offsets.to_numpy()[:-1]][line_span]
+    keep = step > 1
+    l_unit_span = l_idx[line_span[keep]]
+    # unit order: span order, then line order
+    unit_span = np.concatenate((t_idx, l_unit_span))
+    order = np.argsort(unit_span, kind="stable")
+    unit_texts = pa.concat_arrays([t_text, line_text.filter(pa.array(keep))])
+    unit_texts = _to_numpy(unit_texts.take(order))  # object array of str
+    unit_span = unit_span[order]
+    unit_base = np.concatenate((offset[t_idx], offset[l_unit_span] + line_pos[keep]))[order]
+
+    e_unit, e_raw, e_lo, e_hi = _process_units(unit_texts, vocab, trie, model)
+    e_unit = np.asarray(e_unit, dtype=np.int64)
+    e_base = unit_base[e_unit]
+
+    # passthrough spans and entities, ordered in one Arrow sort
+    p_idx = np.flatnonzero(~is_text & ~is_line)
+    n_obj = len(e_unit)
+    rows = pa.table(
+        {
+            "di": np.concatenate((span_doc[p_idx], span_doc[unit_span[e_unit]])),
+            "offset": np.concatenate((offset[p_idx], e_base + np.asarray(e_lo, dtype=np.int64))),
+            "end": np.concatenate((offset[p_idx], e_base + np.asarray(e_hi, dtype=np.int64))),
+            "kind": pa.concat_arrays(
+                [kind.take(p_idx), pa.repeat(pa.scalar("object", kind.type), n_obj)]
+            ),
+            "text": pa.concat_arrays(
+                [
+                    text.take(p_idx),
+                    pc.utf8_trim(pa.array(e_raw, type=text.type), characters=_JAVA_TRIM_CHARS),
+                ]
+            ),
+            "media_ref": pa.concat_arrays(
+                [media_ref.take(p_idx), pa.repeat(pa.scalar("", media_ref.type), n_obj)]
+            ),
+        }
+    )
+    rows = rows.take(pc.sort_indices(rows, sort_keys=_ORDER_KEYS))
+    di = rows.column("di").to_numpy()
+    n = len(di)
+    first = np.ones(n, dtype=bool)
+    first[1:] = di[1:] != di[:-1]
+    at = np.arange(n)
+    seq = at - np.maximum.accumulate(np.where(first, at, 0))
+    return pa.table(
+        {
+            "doc_id": batch.column("doc_id").take(di),
+            "seq": seq.astype(np.int32),
+            "kind": rows.column("kind"),
+            "text": rows.column("text"),
+            "media_ref": rows.column("media_ref"),
+            "offset": rows.column("offset").to_numpy().astype(np.int32),
+            "end": rows.column("end").to_numpy().astype(np.int32),
+        }
+    ).to_pandas()
+
+
+def _process_units(unit_texts, vocab, trie, model):
     """Label all units' tokens in one vectorized pass, then assemble
-    entities with the per-cluster offset walk."""
+    entities with the per-cluster offset walk. Returns per entity its
+    unit, untrimmed raw text, and [start, end) char offsets in the unit."""
     n_units = len(unit_texts)
     # batch tokenization: one megastring pass + arrow dictionary encode
     # (analyzer.tokenize_spans) — the unique-token fast path: every
@@ -124,7 +175,7 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
     tok_codes = batch.codes
     n = len(tok_codes)
     if n == 0:
-        return []
+        return [], [], [], []
     unit_ids = batch.unit_ids
     counts = np.bincount(unit_ids, minlength=n_units)
     unit_starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
@@ -214,14 +265,13 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
         u_astro = uniq_ser.isin(vocab).to_numpy(dtype=bool)
         ucols = compute_columns(uniq_norm, u_astro, None)
         cols: list = [(ucols[c], el_codes) for c in range(17)]
-        cols.append(np.where(in_interval[elig_idx], "1", "0"))
+        cols.append((np.array(["0", "1"], dtype=object), in_interval[elig_idx].astype(np.int64)))
         seq_ids = unit_ids[elig_idx]
         emit = model.emissions(cols, seq_ids)
         labels[elig_idx] = viterbi_batched(emit, seq_ids, model.trans)
 
     # cluster boundaries over eligible tokens (TaggingTokenClusteror
     # semantics): begin-label or core change or unit start
-    rows: list[tuple[int, str, str, str, int, int]] = []
     elig_unit = unit_ids[elig_idx] if len(elig_idx) else np.empty(0, dtype=np.int64)
     elig_labels = labels[elig_idx] if len(elig_idx) else np.empty(0, dtype=np.int64)
     cores = (elig_labels != LABEL_OTHER).astype(np.int8)
@@ -302,12 +352,14 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
         n_lead_l = n_lead_a.tolist()
         core_l = cores[cluster_first].astype(bool).tolist()
 
+    e_unit: list[int] = []
+    e_raw: list[str] = []
+    e_lo: list[int] = []
+    e_hi: list[int] = []
     for ui, lo, hi in zip(obj_units.tolist(), unit_lo.tolist(), unit_hi.tolist()):
         if lo >= hi:
             continue
         text = unit_texts[ui]
-        base = unit_base[ui]
-        di = unit_doc[ui]
         L = len(text)
 
         pos = 0
@@ -325,7 +377,9 @@ def _process_units(unit_doc, unit_base, unit_texts, vocab, trie, model):
             if end_pos > 0 and L >= end_pos and text[end_pos - 1] == " ":
                 end_pos -= 1
             if core_l[j]:
-                raw = java_trim(text[cs_l[j] : ce_l[j]])
-                rows.append((di, "object", raw, "", base + pos, base + end_pos))
+                e_unit.append(ui)
+                e_raw.append(text[cs_l[j] : ce_l[j]])  # java-trimmed by the caller
+                e_lo.append(pos)
+                e_hi.append(end_pos)
             pos = end_pos
-    return rows
+    return e_unit, e_raw, e_lo, e_hi

@@ -4,7 +4,7 @@ The reference is strictly request/response batch (no streaming anywhere —
 SURVEY.md §2.6), but a web-scale ingestion pipeline needs a streaming
 front: new document files land continuously and spans should flow out
 incrementally. The SAME broadcast artifacts and Arrow kernel run inside
-``mapInPandas`` on a streaming DataFrame — extraction is stateless
+``mapInArrow`` on a streaming DataFrame — extraction is stateless
 per-document, so no watermark/state is needed for the core op; the
 windowed-metrics stream shows the stateful side (watermark + tumbling
 window over extraction counts).
@@ -31,7 +31,7 @@ def stream_docs_from_dir(spark: SparkSession, input_dir: str, max_files: int = 3
 def stream_extract(docs_stream: DataFrame, bcast) -> DataFrame:
     """Streaming extraction: stateless narrow map — same kernel as batch."""
     extractor = make_extractor(bcast)
-    out = docs_stream.mapInPandas(extractor, schema=KERNEL_SCHEMA)
+    out = docs_stream.mapInArrow(extractor, schema=KERNEL_SCHEMA)
     return out.select(*OUTPUT_COLUMNS)
 
 

@@ -15,7 +15,7 @@ sys.path.insert(0, REPO)
 
 NOTES = {
     "extract_flagship": (
-        "One scan → salted repartition → ONE MapInPandas stage → project. "
+        "One scan → salted repartition → ONE MapInArrow stage → project. "
         "No other shuffle; ReadSchema carries only doc_id+spans."
     ),
     "p2_blank_filter": (
@@ -459,7 +459,7 @@ NOTES = {
         "Result is boundary-independent for unique keys."
     ),
     "entity_profile": (
-        "Extraction (single MapInPandas stage) feeds a two-phase "
+        "Extraction (single MapInArrow stage) feeds a two-phase "
         "count(DISTINCT doc_id) aggregate keyed by the bounded entity "
         "vocabulary — the wide exchange never carries the span stream."
     ),
@@ -581,7 +581,7 @@ def main() -> None:
         keep = []
         for block in re.split(r"\n\n(?=\(\d+\))", plan[len(tree):]):
             if re.search(
-                r"Scan parquet|BroadcastExchange|HashJoin|MapInPandas|"
+                r"Scan parquet|BroadcastExchange|HashJoin|MapInPandas|MapInArrow|"
                 r"HashAggregate|TakeOrdered|Window|NestedLoop",
                 block.split("\n", 1)[0],
             ):

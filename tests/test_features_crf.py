@@ -57,7 +57,7 @@ def test_viterbi_batched_matches_single():
     emits = [rng.normal(size=(T, N_LABELS)).astype(np.float32) for T in lengths]
     seq_ids = np.repeat(np.arange(len(lengths)), lengths)
     flat = np.concatenate(emits)
-    batched = viterbi_batched(flat, seq_ids, trans, bucket_size=4)
+    batched = viterbi_batched(flat, seq_ids, trans)
     pos = 0
     for T, em in zip(lengths, emits):
         single = viterbi_single(em.astype(np.float64), trans.astype(np.float64))
@@ -68,8 +68,8 @@ def test_viterbi_batched_matches_single():
 def _kernel_inputs(seqs, astro, rng):
     """The kernel's emission inputs for token sequences ``seqs``: per
     distinct token columns 0-16 sharing one codes array, plus a random
-    per-position interval column. Also returns the per-position scalar
-    columns (oracle.scalar_columns)."""
+    per-position interval column as ("0"/"1", flag) codes. Also returns the
+    per-position scalar columns (oracle.scalar_columns)."""
     toks = np.array([t for s in seqs for t in s], dtype=object)
     seq_ids = np.repeat(np.arange(len(seqs)), [len(s) for s in seqs])
     interval = rng.random(len(toks)) < 0.3
@@ -78,7 +78,7 @@ def _kernel_inputs(seqs, astro, rng):
         pd.Series(uniq, dtype="object"), np.array([u in astro for u in uniq]), None
     )
     cols = [(ucols[c], codes) for c in range(17)]
-    cols.append(np.where(interval, "1", "0"))
+    cols.append((np.array(["0", "1"], dtype=object), interval.astype(np.int64)))
     scalar = [scalar_columns(t, t in astro, bool(p)) for t, p in zip(toks, interval)]
     return cols, seq_ids, scalar
 
@@ -102,8 +102,8 @@ def test_emissions_fast_path_matches_template_values(artifacts):
     seqs = np.split(np.array(toks, dtype=object), np.cumsum(lens)[:-1])
     cols, seq_ids, _ = _kernel_inputs(seqs, {"GRB", "NGC", "x"}, rng)
     fast = model.emissions(cols, seq_ids)
-    full = [np.asarray(vals, dtype=object)[codes] for vals, codes in cols[:17]]
-    values = template_values(full + [cols[17]], seq_ids)
+    full = [np.asarray(vals, dtype=object)[codes] for vals, codes in cols]
+    values = template_values(full, seq_ids)
     slow = np.zeros_like(fast)
     for k, vals in enumerate(values):
         vocab, w = model.vocabs[k], model.weights[k]
@@ -195,8 +195,8 @@ def test_emissions_out_of_range_compound_offsets(artifacts, wide_templates):
     # _compound_tables); SEP-bearing batches are covered above
     train = _trigram_seqs(shipped, rng, 200, extra=("1275", "x"))
     cols, seq_ids, _ = _kernel_inputs(train, vocab, rng)
-    full = [np.asarray(vals, dtype=object)[codes] for vals, codes in cols[:17]]
-    vocabs = build_vocabs([template_values(full + [cols[17]], seq_ids)])
+    full = [np.asarray(vals, dtype=object)[codes] for vals, codes in cols]
+    vocabs = build_vocabs([template_values(full, seq_ids)])
     weights = []
     for v in vocabs:
         w = rng.normal(size=(len(v) + 1, N_LABELS)).astype(np.float32)
@@ -263,3 +263,19 @@ def test_viterbi_unrolled_tie_breaks_match_scalar():
         for s, ln in zip(starts, lens):
             single = viterbi_single(emit[s : s + ln], trans.astype(np.float64))
             assert np.array_equal(got[s : s + ln], single)
+
+
+def test_viterbi_equal_lengths_and_long_tied_sequence():
+    """Many equal-length sequences (one shared active prefix at every step)
+    around one 5000-token sequence, with integer scores so exact ties
+    occur throughout: every sequence decodes as viterbi_single does."""
+    rng = np.random.default_rng(11)
+    lens = np.array([6] * 200 + [5000] + [6] * 100 + [1] * 50)
+    rng.shuffle(lens)
+    seq = np.repeat(np.arange(len(lens)), lens)
+    emit = rng.integers(-2, 3, (len(seq), N_LABELS)).astype(np.float64)
+    trans = rng.integers(-1, 2, (N_LABELS, N_LABELS)).astype(np.float32)
+    got = viterbi_batched(emit, seq, trans)
+    for s, ln in zip(np.concatenate(([0], np.cumsum(lens)))[:-1], lens):
+        single = viterbi_single(emit[s : s + ln], trans.astype(np.float64))
+        assert np.array_equal(got[s : s + ln], single)

@@ -3,10 +3,11 @@ BASELINE.json per-row invariant, exercised without Spark)."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from astrospark.fixtures import make_docs
-from astrospark.kernel import extract_batch
+from astrospark.kernel import DOCS_SCHEMA, OUTPUT_COLUMNS, extract_batch
 from astrospark.oracle import process_document
 
 ADVERSARIAL = [
@@ -161,3 +162,79 @@ def test_long_sequence_decode_matches_oracle(artifacts):
     ]
     assert got == want
     assert len(got) > 50  # the doc genuinely exercises decode
+
+
+def test_blank_and_trim_match_oracle(artifacts, monkeypatch):
+    """The kernel's blank-span test (utf8_is_space) and object-text trim
+    (utf8_trim of chars <= 0x20) against the oracle's isBlank / java_trim:
+    every str.isspace() codepoint, "" and non-space controls, as a text
+    span, padded with \\x01, and glued around entities. Blank spans label
+    no objects either way, so the units handed to the tokenizer are
+    checked too."""
+    from astrospark import kernel
+    from astrospark.oracle import is_blank
+
+    units: list = []
+    tokenize = kernel.tokenize_spans
+    monkeypatch.setattr(kernel, "tokenize_spans", lambda t: units.extend(t) or tokenize(t))
+    spaces = [c for c in map(chr, range(0x110000)) if c.isspace()]
+    assert len(spaces) == 29 and {"\x1c", "\x1f", "\x85", "\u3000"} <= set(spaces)
+    chars = [""] + spaces + ["\x00", "\x01", "\x7f", "\u200b"]
+    docs = [
+        {
+            "doc_id": f"c{i}",
+            "spans": [
+                {"kind": "text", "text": t, "media_ref": "", "offset": 10 * j}
+                for j, t in enumerate(
+                    (c, f"\x01{c}\x01", f"{c}GRB 020819B{c} near {c}NGC 1275 {c}\x01")
+                )
+            ],
+        }
+        for i, c in enumerate(chars)
+    ]
+    _check(docs, artifacts)
+    blank = [t for d in docs for t in (s["text"] for s in d["spans"]) if is_blank(t)]
+    assert len(blank) == 30 and not any(map(is_blank, units))
+
+
+def test_arrow_input_edge_cases(artifacts):
+    """A sliced RecordBatch (non-zero offset) with null and empty span
+    lists, null text/media_ref, and line spans with blank, trailing and
+    CRLF lines: the kernel on the RecordBatch, on the same rows as pandas,
+    and the oracle agree per doc."""
+    vocab, trie, model = artifacts
+    ent = [{"kind": "text", "text": "We see GRB 020819B.", "media_ref": "", "offset": 0}]
+    docs = [
+        ("n0", None),
+        ("e0", []),
+        ("t0", [
+            {"kind": "text", "text": None, "media_ref": None, "offset": 0},
+            {"kind": "media", "text": None, "media_ref": None, "offset": 2},
+            {"kind": "table", "text": None, "media_ref": "", "offset": 3},
+        ]),
+        ("l0", [{"kind": "table", "text": "GRB 020819B\n\nNGC 1275\n", "media_ref": "", "offset": 4}]),
+        ("l1", [
+            {"kind": "figure", "text": "M 31\r\nNGC 1275\r\n\n", "media_ref": "", "offset": 0},
+            {"kind": "media", "text": "", "media_ref": "img://x", "offset": 20},
+            {"kind": "text", "text": "We see GRB 030329.", "media_ref": "", "offset": 21},
+        ]),
+    ]
+    full = pa.RecordBatch.from_pydict(
+        {
+            "doc_id": ["pad0"] + [d for d, _ in docs] + ["pad1"],
+            "spans": [ent] + [s for _, s in docs] + [ent],
+        },
+        schema=DOCS_SCHEMA,
+    )
+    batch = full.slice(1, len(docs))
+    out = extract_batch(batch, vocab, trie, model)
+    pd.testing.assert_frame_equal(out, extract_batch(batch.to_pandas(), vocab, trie, model))
+    assert set(out.doc_id) <= {d for d, _ in docs}
+    for doc_id, spans in docs:
+        assert _rows(out, doc_id) == process_document(spans or [], vocab, trie, model), doc_id
+    assert (out.kind == "object").sum() >= 4
+
+    # all-[] spans: pandas alone would infer list<null>
+    none = extract_batch(pd.DataFrame({"doc_id": ["a", "b"], "spans": [[], []]}), vocab, trie, model)
+    assert none.empty and tuple(none.columns) == OUTPUT_COLUMNS
+    assert none.dtypes.astype(str).tolist() == ["object", "int32", "object", "object", "object", "int32", "int32"]

@@ -336,7 +336,8 @@ def test_pii_redact_no_shuffle(spark):
 
     plan = _plan(pii_redact(spark, SF))
     assert "Exchange (" not in plan
-    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
+    for udf in ("BatchEvalPython", "MapInPandas", "MapInArrow"):
+        assert udf not in plan
 
 
 def test_stats_rollup_python_replay(spark):
@@ -517,7 +518,8 @@ def test_embedding_hygiene_no_shuffle(spark):
 
     plan = _plan(embedding_hygiene(spark, SF))
     assert "Exchange (" not in plan
-    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
+    for udf in ("BatchEvalPython", "MapInPandas", "MapInArrow"):
+        assert udf not in plan
 
 
 def test_substring_pairs_python_replay(spark):

@@ -28,7 +28,7 @@ def queries():
 
 
 def test_extraction_single_exchange_single_udf(spark, artifacts):
-    """Flagship plan: one salted repartition Exchange, ONE MapInPandas,
+    """Flagship plan: one salted repartition Exchange, ONE MapInArrow,
     nothing else wide (north_rule: one narrow Arrow-UDF stage)."""
     from astrospark.engine.extraction import broadcast_artifacts, extract_spans
     from astrospark.fixtures import docs_dataframe
@@ -36,7 +36,7 @@ def test_extraction_single_exchange_single_udf(spark, artifacts):
     bcast = broadcast_artifacts(spark, artifacts)
     plan = plan_of(extract_spans(docs_dataframe(spark, 10, seed=1, skew_every=0), bcast))
     # "Name (" matches the tree node once; "(n) Name" detail blocks don't
-    assert plan.count("MapInPandas (") == 1
+    assert plan.count("MapInArrow (") == 1
     # exactly the explicit repartition; no join/agg/sort exchanges
     assert plan.count("Exchange (") == 1
     for bad in ("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin"):
